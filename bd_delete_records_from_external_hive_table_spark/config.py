@@ -141,7 +141,6 @@ class EngineConfig:
 
     # performance (C2)
     partition_parallelism: int = 10   # partitions per delete batch
-    batch_size: int = 1_000_000       # declared in the reference, never consumed
 
     dry_run: bool = False
     #: engine extension: retain rows where the predicate evaluates to NULL
@@ -188,7 +187,6 @@ _PROPERTY_KEYS = {
     "recovery.auto.enabled": ("auto_recovery", lambda v: v.lower() == "true"),
     "recovery.max.retries": ("max_retries", int),
     "partition.parallelism": ("partition_parallelism", int),
-    "batch.size": ("batch_size", int),
     "dry.run.enabled": ("dry_run", lambda v: v.lower() == "true"),
 }
 

@@ -60,82 +60,54 @@ class DeletionJob:
         audit("job_started", table=cfg.qualified_table,
               criteria=cfg.criteria.describe(), dry_run=cfg.dry_run)
         try:
-            # 1. identify affected partitions (single-scan analysis)
+            # 1. identify affected partitions (single-scan analysis); a
+            # failed analysis leaves counts=None and every candidate
+            # affected
             plan = self.handler.analyze()
-            affected = plan.affected
-            if not affected and not any(m < 0 for _, m in plan.counts.values()):
-                log.info("no partitions affected; nothing to delete")
-                if cfg.dry_run:
-                    result = self.executor.dry_run(plan)
-                else:
-                    # a REAL run that found nothing: report a real result,
-                    # not a dry-run one (no dry_run metrics/audit event)
-                    result = DeletionResult(
-                        deleted=0, retained=0, partitions_rewritten=[],
-                        partitions_dropped=[], dry_run=False,
-                        metrics=self.metrics)
-                    audit("deletion_executed", table=cfg.qualified_table,
-                          deleted=0, retained=0, dropped=[], rewritten=[])
-                self.metrics.finish(True)
-                return JobOutcome(True, result, None, None, self.metrics)
+            if plan.affected:
+                # 2. pre-validation
+                pre = self.validator.validate_pre_deletion()
+                if not pre.passed:
+                    raise RuntimeError(f"pre-validation failed: {pre.details}")
 
-            # 2. pre-validation
-            pre = self.validator.validate_pre_deletion()
-            if not pre.passed:
-                raise RuntimeError(f"pre-validation failed: {pre.details}")
+                # 3. backup the partitions the executor may touch; the
+                # plan's totals spare the backup validation its own source
+                # scan (unknown when the analysis failed)
+                if cfg.backup_enabled and not cfg.dry_run:
+                    expected = None if plan.counts is None else sum(
+                        plan.counts[p][0] for p in plan.affected)
+                    backup_ref = self.backups.create_backup(
+                        plan.affected, expected_count=expected)
+                    self.metrics.backup_created = True
+                    self.metrics.backup_ref = backup_ref.ref
 
-            # When the probe failed, the executor conservatively rewrites
-            # EVERY candidate (counts are the (-1,-1) sentinel) — so the
-            # backup must cover every candidate too, and count-based
-            # expectations are unknowable.
-            probe_failed = any(m < 0 for _, m in plan.counts.values())
-            backup_set = plan.candidates if probe_failed else affected
-
-            # 3. backup the partitions the executor may touch; the plan's
-            # totals spare the backup validation its own source scan
-            # (unknown when the probe failed)
-            if cfg.backup_enabled and not cfg.dry_run and backup_set:
-                expected = None if probe_failed else sum(
-                    plan.counts[p][0] for p in backup_set)
-                backup_ref = self.backups.create_backup(
-                    backup_set, expected_count=expected)
-                self.metrics.backup_created = True
-                self.metrics.backup_ref = backup_ref.ref
-
-            # 5. delete (dry-run early-exits inside). On the probe-failed
-            # path the executor repairs plan.counts (in place) with a real
-            # scan before mutating anything.
+            # 5. delete; a dry run or an empty plan writes nothing, and
+            # there is nothing to validate or clean up after it
             result = self.executor.execute(plan)
-            if result.dry_run:
+            if result.dry_run or not plan.affected:
                 self.metrics.finish(True)
                 return JobOutcome(True, result, None, backup_ref, self.metrics)
 
-            # 4./6. counts: affected-partition totals come free from the
+            # 4./6. counts: the expected retained rows come free from the
             # plan — no extra whole-table scan (HiveTableDeletionJob.java:
             # 117-123 runs three full counts here; the plan aggregation
-            # subsumes them). Computed after execute() so the repaired
-            # counts are used when the original probe failed.
-            if any(t < 0 for t, _ in plan.counts.values()):
-                expected_retained_affected = None  # probe never recovered
+            # subsumes them). Without plan counts every candidate was
+            # rewritten, so the rows the rewrite kept are the expectation.
+            if plan.counts is None:
+                expected_retained_affected = result.retained
             else:
-                before_affected = sum(t for t, _ in plan.counts.values())
-                expected_retained_affected = \
-                    before_affected - plan.would_delete
+                expected_retained_affected = sum(
+                    t for t, _ in plan.counts.values()) - plan.would_delete
 
-            # 6. post-validation — plan.affected is re-read here because
-            # execute() repairs sentinel counts in place on the
-            # probe-failed path (the pre-execute `affected` would be
-            # stale/empty and silently skip the structure check)
+            # 6. post-validation
             validation = None
             if cfg.validation_enabled:
-                surviving = [p for p in plan.affected
-                             if p not in result.partitions_dropped]
                 # Scope every check to the partitions the deletion covered:
                 # rows outside the partition window may still match the
                 # criteria by design, and whole-table scans don't survive
                 # the 100 TB design point.
                 validation = self.validator.validate_post_deletion(
-                    expected_retained_affected, surviving,
+                    expected_retained_affected, result.partitions_rewritten,
                     scope_partitions=plan.candidates)
                 self.metrics.validation_passed = validation.passed
                 if not validation.passed:

@@ -1,22 +1,36 @@
-"""Backup & restore strategies.
+"""Backup & restore.
 
 Re-expression of ``/root/reference/.../backup/`` (BackupManager.java,
 BackupStrategy.java, HiveTableBackupStrategy.java, HDFSBackupStrategy.java).
 
-Two strategies, same contract as the reference:
+A strategy keeps only what differs between backup media — write, read,
+list and delete:
 
 - **HiveTableBackupStrategy** — ``saveAsTable`` a partitioned ORC clone named
   ``<table>_backup_<yyyyMMdd_HHmmss>`` tagged with TBLPROPERTIES
-  (HiveTableBackupStrategy.java:25-57); restore via dynamic-partition
-  overwrite back into the original (60-75); retention drops backup tables
-  older than N days (98-138).
+  (HiveTableBackupStrategy.java:25-57).
 - **PathBackupStrategy** — partitioned ORC written to a filesystem path plus
   a ``_manifest.txt`` manifest (HDFSBackupStrategy.java:28-53,151-175 —
   the reference names it ``_metadata.txt``, but Spark's file index treats
   names starting with ``_metadata`` as parquet summary files and would
-  feed it to the ORC reader; ``_manifest`` stays properly hidden);
-  restore reads the ORC back (56-73); retention deletes old dirs by
-  modification time (100-129).
+  feed it to the ORC reader; ``_manifest`` stays properly hidden).
+
+:class:`BackupManager` owns the rest for both: the row-count validation,
+restore through the shared copy-on-write commit
+(:func:`.deletion.commit_partitions`; HiveTableBackupStrategy.java:60-75,
+HDFSBackupStrategy.java:56-73), and the latest-backup lookup and the
+retention sweep, which walk one listing under one eligibility rule:
+
+- **Eligibility.** A listed backup belongs to this table when its recorded
+  source (TBLPROPERTY ``backup_source``, manifest ``source_table``) is this
+  table, or when it records no source and its name suffix parses as a
+  timestamp. Another table's backups that share the name prefix
+  (``t_backup_x``'s backups start with ``t_backup_``) or a shared
+  ``backup_location`` are never restored and never swept.
+- **Ages.** ``latest`` orders by the recorded ``backup_timestamp``,
+  falling back to the name suffix. Retention ages a Hive backup the same
+  way (HiveTableBackupStrategy.java:98-138) and a path backup by its
+  directory's modification time (HDFSBackupStrategy.java:100-129).
 
 Timestamps for backup naming are injected (``now``) rather than read from a
 global clock so tests are deterministic.
@@ -24,24 +38,29 @@ global clock so tests are deterministic.
 
 from __future__ import annotations
 
-import logging
+from collections.abc import Iterator
 from dataclasses import dataclass
 from datetime import datetime, timedelta
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EngineConfig
 from ..metrics import audit
 from ..partitions import in_list_predicate
 from ..sources.fs import HadoopFS
+from .deletion import commit_partitions
 
 __all__ = ["BackupManager", "BackupRef", "HiveTableBackupStrategy",
            "PathBackupStrategy", "BackupError"]
 
-log = logging.getLogger(__name__)
-
 _TS_FMT = "%Y%m%d_%H%M%S"
+
+
+def _ts(text: str | None) -> datetime | None:
+    try:
+        return datetime.strptime(text or "", _TS_FMT)
+    except ValueError:
+        return None
 
 
 class BackupError(RuntimeError):
@@ -59,23 +78,40 @@ class BackupRef:
     created_at: datetime
 
 
-class HiveTableBackupStrategy:
-    """Backup into a Hive table (HiveTableBackupStrategy.java)."""
+@dataclass(frozen=True)
+class _Listed:
+    """A backup-named entry as its strategy lists it."""
 
-    name = "hive_table"
+    ref: str
+    #: the name after ``<table>_backup_``
+    suffix: str
+    source: str | None
+    timestamp: str | None
+    partitions: str
+    #: directory modification time (path backups age by it)
+    mtime: datetime | None = None
+
+
+class _Strategy:
+    name = ""
 
     def __init__(self, spark: SparkSession, config: EngineConfig):
         self.spark = spark
         self.config = config
 
-    def _backup_table(self, now: datetime) -> str:
-        return (f"{self.config.database}."
-                f"{self.config.table}_backup_{now.strftime(_TS_FMT)}")
+    def backup_count(self, ref: BackupRef) -> int:
+        return self.read(ref).count()
 
-    def create(self, partitions: list[str], now: datetime) -> BackupRef:
+
+class HiveTableBackupStrategy(_Strategy):
+    """Backup into a Hive table (HiveTableBackupStrategy.java)."""
+
+    name = "hive_table"
+
+    def write(self, df: DataFrame, partitions: list[str],
+              now: datetime) -> str:
         cfg = self.config
-        name = self._backup_table(now)
-        df = self._scan(partitions)
+        name = f"{cfg.database}.{cfg.table}_backup_{now.strftime(_TS_FMT)}"
         (df.write.mode("overwrite").format("orc")
            .partitionBy(cfg.partition_column).saveAsTable(name))
         parts_csv = ",".join(partitions).replace("'", "")
@@ -84,132 +120,54 @@ class HiveTableBackupStrategy:
             f"'backup_source'='{cfg.qualified_table}',"
             f"'backup_timestamp'='{now.strftime(_TS_FMT)}',"
             f"'backup_partitions'='{parts_csv}')")
-        return BackupRef(self.name, name, cfg.qualified_table,
-                         tuple(partitions), now)
+        return name
 
-    def restore(self, ref: BackupRef) -> int:
-        """Dynamic-partition overwrite of the original from the backup
-        (HiveTableBackupStrategy.java:60-75). The restored-row count is
-        observe()d during the write — the reference pays a second backup
-        scan for it (HiveTableBackupStrategy.java:81)."""
-        df = self.spark.table(ref.ref)
-        cols = self.spark.table(ref.source_table).columns
-        obs = Observation()
-        (df.select(*cols)
-         .observe(obs, F.count(F.lit(1)).alias("rows"))
-         .write.mode("overwrite").insertInto(ref.source_table))
-        return int(obs.get["rows"])
+    def read(self, ref: BackupRef) -> DataFrame:
+        return self.spark.table(ref.ref)
 
-    def backup_count(self, ref: BackupRef) -> int:
-        return self.spark.table(ref.ref).count()
-
-    def cleanup_old(self, retention_days: int, now: datetime) -> list[str]:
-        """Drop backup tables older than the retention window
-        (HiveTableBackupStrategy.java:98-138)."""
+    def list_backups(self) -> Iterator[_Listed]:
         # Hive lowercases table names in the catalog; compare
         # case-insensitively or mixed-case configs never match their
         # own backups and retention silently stops working.
+        # Both commands are collected plainly: that runs no Spark job,
+        # where catalog.listTables() and a filtered SHOW TBLPROPERTIES
+        # each run jobs.
+        db = self.config.database
         prefix = f"{self.config.table}_backup_".lower()
-        cutoff = now - timedelta(days=retention_days)
-        dropped = []
-        for t in self.spark.catalog.listTables(self.config.database):
-            if not t.name.lower().startswith(prefix):
+        for t in self.spark.sql(f"SHOW TABLES IN {db}").collect():
+            name = t["tableName"]
+            if t["isTemporary"] or not name.lower().startswith(prefix):
                 continue
-            ts = _parse_backup_ts(self.spark, f"{self.config.database}.{t.name}",
-                                  t.name, prefix)
-            if ts is not None and ts < cutoff:
-                self.spark.sql(
-                    f"DROP TABLE IF EXISTS {self.config.database}.{t.name}")
-                dropped.append(t.name)
-        return dropped
-
-    def latest(self) -> BackupRef | None:
-        """Most recent backup table *of this source*, or None. One
-        SHOW TBLPROPERTIES per candidate provides timestamp, partitions,
-        and — critically — the ``backup_source`` check: a backup whose
-        recorded source is a different table is never eligible (restoring
-        it would overwrite this table with another table's rows)."""
-        cfg = self.config
-        prefix = f"{cfg.table}_backup_".lower()
-        best: tuple[datetime, str, tuple[str, ...]] | None = None
-        for t in self.spark.catalog.listTables(cfg.database):
-            if not t.name.lower().startswith(prefix):
-                continue
-            qualified = f"{cfg.database}.{t.name}"
-            props: dict[str, str] = {}
+            qualified = f"{db}.{name}"
             try:
-                props = {r[0]: r[1] for r in self.spark.sql(
-                    f"SHOW TBLPROPERTIES {qualified}").collect()}
+                props = dict(self.spark.sql(
+                    f"SHOW TBLPROPERTIES {qualified}").collect())
             except Exception:  # pragma: no cover - probe best-effort
-                pass
-            source = props.get("backup_source")
-            if source is not None and source != cfg.qualified_table:
-                continue
-            ts: datetime | None = None
-            if "backup_timestamp" in props:
-                try:
-                    ts = datetime.strptime(props["backup_timestamp"],
-                                           _TS_FMT)
-                except ValueError:
-                    ts = None
-            if ts is None:
-                try:
-                    ts = datetime.strptime(t.name[len(prefix):], _TS_FMT)
-                except ValueError:
-                    continue
-            if best is None or ts > best[0]:
-                parts = tuple(p for p in
-                              props.get("backup_partitions", "").split(",")
-                              if p)
-                best = (ts, qualified, parts)
-        if best is None:
-            return None
-        return BackupRef(self.name, best[1], cfg.qualified_table,
-                         best[2], best[0])
+                props = {}
+            yield _Listed(qualified, name[len(prefix):],
+                          props.get("backup_source"),
+                          props.get("backup_timestamp"),
+                          props.get("backup_partitions", ""))
 
-    def _scan(self, partitions: list[str]) -> DataFrame:
-        cfg = self.config
-        return (self.spark.table(cfg.qualified_table)
-                .where(in_list_predicate(cfg.partition_column, partitions)))
+    def delete(self, ref: str) -> None:
+        self.spark.sql(f"DROP TABLE IF EXISTS {ref}")
 
 
-def _parse_backup_ts(spark: SparkSession, qualified: str, name: str,
-                     prefix: str) -> datetime | None:
-    """Prefer the ``backup_timestamp`` TBLPROPERTY
-    (HiveTableBackupStrategy.java:117-121); fall back to the name suffix."""
-    try:
-        rows = (spark.sql(f"SHOW TBLPROPERTIES {qualified}")
-                .filter("key = 'backup_timestamp'").select("value").collect())
-        if rows:
-            return datetime.strptime(rows[0][0], _TS_FMT)
-    except Exception:
-        pass
-    try:
-        return datetime.strptime(name[len(prefix):], _TS_FMT)
-    except ValueError:
-        return None
-
-
-class PathBackupStrategy:
+class PathBackupStrategy(_Strategy):
     """Backup to a filesystem path as partitioned ORC + manifest
     (HDFSBackupStrategy.java)."""
 
     name = "path"
 
     def __init__(self, spark: SparkSession, config: EngineConfig):
-        self.spark = spark
-        self.config = config
+        super().__init__(spark, config)
         self.fs = HadoopFS(spark)
 
-    def _backup_path(self, now: datetime) -> str:
-        return (f"{self.config.backup_location.rstrip('/')}/"
-                f"{self.config.table}_backup_{now.strftime(_TS_FMT)}")
-
-    def create(self, partitions: list[str], now: datetime) -> BackupRef:
+    def write(self, df: DataFrame, partitions: list[str],
+              now: datetime) -> str:
         cfg = self.config
-        path = self._backup_path(now)
-        df = (self.spark.table(cfg.qualified_table)
-              .where(in_list_predicate(cfg.partition_column, partitions)))
+        path = (f"{cfg.backup_location.rstrip('/')}/"
+                f"{cfg.table}_backup_{now.strftime(_TS_FMT)}")
         (df.write.mode("overwrite").format("orc")
            .partitionBy(cfg.partition_column).save(path))
         manifest = "\n".join([
@@ -218,70 +176,32 @@ class PathBackupStrategy:
             f"partitions={','.join(partitions)}",
         ])
         self.fs.write_text(f"{path}/_manifest.txt", manifest)
-        return BackupRef(self.name, path, cfg.qualified_table,
-                         tuple(partitions), now)
+        return path
 
-    def restore(self, ref: BackupRef) -> int:
-        """Restore count observe()d during the write — one backup scan,
-        not two (HDFSBackupStrategy.java:83 re-counts)."""
-        df = self.spark.read.format("orc").load(ref.ref)
-        cols = self.spark.table(ref.source_table).columns
-        obs = Observation()
-        (df.select(*cols)
-         .observe(obs, F.count(F.lit(1)).alias("rows"))
-         .write.mode("overwrite").insertInto(ref.source_table))
-        return int(obs.get["rows"])
+    def read(self, ref: BackupRef) -> DataFrame:
+        return self.spark.read.format("orc").load(ref.ref)
 
-    def backup_count(self, ref: BackupRef) -> int:
-        return self.spark.read.format("orc").load(ref.ref).count()
-
-    def cleanup_old(self, retention_days: int, now: datetime) -> list[str]:
-        """Delete backup dirs whose modification time predates the cutoff
-        (HDFSBackupStrategy.java:100-129)."""
-        base = self.config.backup_location
-        cutoff_ms = (now - timedelta(days=retention_days)).timestamp() * 1000
-        deleted = []
-        for path, mod_ms in self.fs.list_dirs(base):
-            if f"/{self.config.table}_backup_" in path and mod_ms < cutoff_ms:
-                self.fs.delete(path, recursive=True)
-                deleted.append(path)
-        return deleted
-
-    def latest(self) -> BackupRef | None:
-        """Most recent backup dir *of this source* (timestamp from the
-        directory-name suffix; source + partitions from ``_manifest.txt``).
-        Candidates are checked newest-first and a manifest recording a
-        different ``source_table`` is skipped — a shared backup_location
-        can hold same-named tables from several databases."""
-        cfg = self.config
-        marker = f"/{cfg.table}_backup_"
-        candidates: list[tuple[datetime, str]] = []
-        for path, _ in self.fs.list_dirs(cfg.backup_location):
+    def list_backups(self) -> Iterator[_Listed]:
+        marker = f"/{self.config.table}_backup_"
+        for path, mod_ms in self.fs.list_dirs(self.config.backup_location):
             if marker not in path:
                 continue
+            manifest: dict[str, str] = {}
             try:
-                ts = datetime.strptime(path.rsplit(marker, 1)[1], _TS_FMT)
-            except ValueError:
-                continue
-            candidates.append((ts, path))
-        for ts, path in sorted(candidates, reverse=True):
-            source: str | None = None
-            parts: tuple[str, ...] = ()
-            try:
-                manifest = self.fs.read_text(f"{path}/_manifest.txt")
-                for line in manifest.splitlines():
+                for line in self.fs.read_text(
+                        f"{path}/_manifest.txt").splitlines():
                     key, _, value = line.partition("=")
-                    if key == "partitions":
-                        parts = tuple(p for p in value.split(",") if p)
-                    elif key == "source_table":
-                        source = value
+                    manifest[key] = value
             except Exception:  # pragma: no cover - manifest best-effort
                 pass
-            if source is not None and source != cfg.qualified_table:
-                continue
-            return BackupRef(self.name, path, cfg.qualified_table,
-                             parts, ts)
-        return None
+            yield _Listed(path, path.rsplit(marker, 1)[1],
+                          manifest.get("source_table"),
+                          manifest.get("backup_timestamp"),
+                          manifest.get("partitions", ""),
+                          datetime.fromtimestamp(mod_ms / 1000))
+
+    def delete(self, ref: str) -> None:
+        self.fs.delete(ref, recursive=True)
 
 
 class BackupManager:
@@ -305,11 +225,13 @@ class BackupManager:
             raise BackupError("no partitions to back up")
         now = now or datetime.now()
         cfg = self.config
-        source_count = expected_count if expected_count is not None else (
-            self.spark.table(cfg.qualified_table)
-            .where(in_list_predicate(cfg.partition_column, partitions))
-            .count())
-        ref = self.strategy.create(partitions, now)
+        source = (self.spark.table(cfg.qualified_table)
+                  .where(in_list_predicate(cfg.partition_column, partitions)))
+        source_count = (expected_count if expected_count is not None
+                        else source.count())
+        ref = BackupRef(self.strategy.name,
+                        self.strategy.write(source, partitions, now),
+                        cfg.qualified_table, tuple(partitions), now)
         backup_count = self.strategy.backup_count(ref)
         if backup_count != source_count:
             raise BackupError(
@@ -320,18 +242,50 @@ class BackupManager:
         return ref
 
     def restore(self, ref: BackupRef) -> int:
-        restored = self.strategy.restore(ref)
+        """Dynamic-partition overwrite of the source from the backup. The
+        restored-row count is observe()d during the write — the reference
+        pays a second backup scan for it (HiveTableBackupStrategy.java:81,
+        HDFSBackupStrategy.java:83)."""
+        restored = commit_partitions(
+            self.spark, ref.source_table, self.config.partition_column,
+            self.strategy.read(ref)).written
         audit("backup_restored", ref=ref.ref, rows=restored)
         return restored
+
+    def _eligible(self) -> list[tuple[_Listed, datetime | None]]:
+        """This table's backups with their recorded creation time (the
+        eligibility rule in the module docstring)."""
+        own = []
+        for entry in self.strategy.list_backups():
+            named = _ts(entry.suffix)
+            if (entry.source == self.config.qualified_table
+                    or (entry.source is None and named is not None)):
+                own.append((entry, _ts(entry.timestamp) or named))
+        return own
 
     def latest_backup(self) -> BackupRef | None:
         """Most recent backup for the configured table under the
         configured strategy (manual-restore entry point)."""
-        return self.strategy.latest()
+        dated = [(ts, entry) for entry, ts in self._eligible()
+                 if ts is not None]
+        if not dated:
+            return None
+        ts, entry = max(dated, key=lambda d: d[0])
+        return BackupRef(self.strategy.name, entry.ref,
+                         self.config.qualified_table,
+                         tuple(p for p in entry.partitions.split(",") if p),
+                         ts)
 
     def cleanup_old_backups(self, now: datetime | None = None) -> list[str]:
-        now = now or datetime.now()
-        removed = self.strategy.cleanup_old(self.config.backup_retention_days, now)
+        """Remove this table's backups older than the retention window."""
+        cutoff = ((now or datetime.now())
+                  - timedelta(days=self.config.backup_retention_days))
+        removed = []
+        for entry, created in self._eligible():
+            age = entry.mtime or created
+            if age is not None and age < cutoff:
+                self.strategy.delete(entry.ref)
+                removed.append(entry.ref)
         if removed:
             audit("backups_cleaned", removed=removed)
         return removed

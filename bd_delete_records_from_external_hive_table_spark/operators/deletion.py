@@ -20,15 +20,26 @@ the planner needs: affected partitions (matches > 0), fully-emptied
 partitions (matches == total → metadata-only DROP, no rewrite), and exact
 per-partition delete counts for metrics. At 10k partitions this is ~10k×
 fewer Spark jobs than the reference's loop; at 100 TB the scan is pruned to
-candidate partitions and the criteria predicate is pushed down to the
-ORC/parquet reader (filterPushdown conf in session.py).
+candidate partitions.
+
+**One commit step.** Every copy-on-write writer in the package (this
+executor, merge-on-read compaction, UPSERT, backup restore and the
+partition-overwrite streaming sink) commits through
+:func:`commit_partitions`. Dynamic overwrite keeps the old rows of a
+partition absent from the written data, so for a caller that reads through
+:func:`observed_scan` the commit DROPs each partition that held rows before
+the write and has none after it. A registered partition that was already
+empty is never dropped.
 
 Deliberate deviations from reference quirks (SURVEY §2n "noted quirks"):
-the empty-retention fast path is decided **per partition** (the reference
-drops every partition in a batch when the *batch-wide* retained count is 0,
-DeletionExecutor.java:166-171), and per-partition metrics are exact.
-Conservative inclusion on probe failure is preserved
-(PartitionHandler.java:118-122).
+the drop decision is made **per partition** (the reference drops every
+partition in a batch when the *batch-wide* retained count is 0,
+DeletionExecutor.java:166-171): up front for the partitions the plan knows
+fully match, which skips reading them back, and at commit time for the
+rest. Per-partition metrics are exact. A failed analysis leaves
+``counts=None``: every candidate is rewritten, as in the reference's
+conservative inclusion (PartitionHandler.java:118-122), and the commit's
+counts and drops replace a repair scan.
 """
 
 from __future__ import annotations
@@ -36,7 +47,8 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
@@ -50,7 +62,9 @@ from ..partitions import (
 )
 from ..sources.fs import HadoopFS
 
-__all__ = ["PartitionHandler", "DeletionExecutor", "PartitionPlan", "DeletionResult"]
+__all__ = ["PartitionHandler", "DeletionExecutor", "PartitionPlan",
+           "DeletionResult", "Commit", "observed_scan", "commit_partitions",
+           "drop_partitions"]
 
 log = logging.getLogger(__name__)
 
@@ -60,22 +74,29 @@ class PartitionPlan:
     """Outcome of the single-scan affected-partition analysis."""
 
     candidates: list[str]
-    #: partition -> (total rows, rows matching the deletion predicate)
-    counts: dict[str, tuple[int, int]] = field(default_factory=dict)
+    #: partition -> (total rows, rows matching the deletion predicate);
+    #: None when the analysis failed and every candidate is rewritten
+    counts: dict[str, tuple[int, int]] | None = field(default_factory=dict)
 
     @property
     def affected(self) -> list[str]:
+        if self.counts is None:
+            return self.candidates
         return sort_chronologically(
             [p for p, (_, m) in self.counts.items() if m > 0])
 
     @property
     def to_drop(self) -> list[str]:
         """Fully-emptied partitions → metadata-only DROP fast path."""
+        if self.counts is None:
+            return []
         return sort_chronologically(
             [p for p, (t, m) in self.counts.items() if m > 0 and m == t])
 
     @property
     def to_rewrite(self) -> list[str]:
+        if self.counts is None:
+            return self.candidates
         return sort_chronologically(
             [p for p, (t, m) in self.counts.items() if 0 < m < t])
 
@@ -92,6 +113,110 @@ class DeletionResult:
     partitions_dropped: list[str]
     dry_run: bool
     metrics: MetricsCollector
+
+
+@dataclass
+class Commit:
+    """Rows one :func:`commit_partitions` call read (None without an
+    observed scan) and wrote, the partitions it wrote, and those it
+    emptied and dropped."""
+
+    read: int | None
+    written: int
+    partitions: list[str]
+    dropped: list[str]
+
+
+def _observe_rows(df: DataFrame, obs: Observation, pcol: str) -> DataFrame:
+    # collect_set works inside observe(): both metrics ride the one job.
+    # The cast matches partition values a reader inferred as numbers
+    # (ORC backups read back by path) to the table's string values.
+    return df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                      F.collect_set(F.col(pcol).cast("string"))
+                      .alias("partitions"))
+
+
+def _observed(obs: Observation) -> dict:
+    try:
+        return obs.get
+    except Py4JJavaError as exc:
+        # the optimizer removes an observation whose subtree it proves
+        # empty, e.g. under a predicate that folds to FALSE
+        raise RuntimeError(
+            "a commit observation was optimized away; the partitions the "
+            "write emptied are unknown") from exc
+
+
+def observed_scan(spark: SparkSession, table: str, pcol: str,
+                  partitions: list[str]) -> tuple[DataFrame, Observation]:
+    """``table`` pruned to ``partitions``, observing the rows it reads and
+    the partitions holding them, for :func:`commit_partitions`. The IN-list
+    sits below the observation and stays a partition filter; predicates
+    added on top are no longer pushed into the file reader."""
+    obs = Observation()
+    scan = spark.table(table).where(in_list_predicate(pcol, partitions))
+    return _observe_rows(scan, obs, pcol), obs
+
+
+def commit_partitions(spark: SparkSession, table: str, pcol: str,
+                      frame: DataFrame,
+                      read: Observation | None = None) -> Commit:
+    """The copy-on-write commit (DeletionExecutor.java:215-222): one
+    dynamic-partition overwrite of ``frame`` into ``table`` that observe()s
+    the rows and partitions it writes, then drops the partitions ``read``
+    saw holding rows that the write left empty. NO ``partitionBy`` on
+    insertInto — the table's partition spec governs (TEST_FIX.md:16-41)."""
+    # Correctness-critical: static overwrite mode would truncate the WHOLE
+    # table. SessionFactory pins dynamic, but foreachBatch clones and
+    # callers' own sessions reach this too.
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    wrote = Observation()
+    # insertInto is positional: align to the table's column order
+    (_observe_rows(frame.select(*spark.table(table).columns), wrote, pcol)
+     .write.mode("overwrite").insertInto(table))
+    out = _observed(wrote)
+    held = _observed(read) if read is not None else {"rows": None,
+                                                     "partitions": []}
+    emptied = sort_chronologically(
+        list(set(held["partitions"]) - set(out["partitions"])))
+    return Commit(read=held["rows"], written=out["rows"],
+                  partitions=sort_chronologically(out["partitions"]),
+                  dropped=drop_partitions(spark, table, pcol, emptied))
+
+
+def drop_partitions(spark: SparkSession, table: str, pcol: str,
+                    partitions: list[str]) -> list[str]:
+    """Empty-partition fast path: metadata DROP + external-dir delete
+    (DeletionExecutor.java:164-214). External tables keep their HDFS
+    directory after DROP PARTITION, so the files are removed explicitly
+    (DeletionExecutor.java:251-269)."""
+    fs = HadoopFS(spark)
+    for pid in partitions:
+        spec = partition_spec(pcol, pid)
+        location = _partition_location(spark, table, spec)
+        spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION ({spec})")
+        if location:
+            try:
+                fs.delete(location, recursive=True)
+            except Exception as exc:
+                log.warning("could not delete partition dir %s: %s",
+                            location, exc)
+        audit("partition_dropped", table=table, partition=pid,
+              location=location)
+    return list(partitions)
+
+
+def _partition_location(spark: SparkSession, table: str,
+                        spec: str) -> str | None:
+    """DESCRIBE FORMATTED ... PARTITION → Location
+    (DeletionExecutor.java:173-187)."""
+    try:
+        rows = (spark.sql(f"DESCRIBE FORMATTED {table} PARTITION ({spec})")
+                .filter(F.col("col_name") == "Location")
+                .select("data_type").collect())
+        return rows[0][0] if rows else None
+    except Exception:
+        return None
 
 
 class PartitionHandler:
@@ -122,31 +247,36 @@ class PartitionHandler:
         """Single-scan replacement for the reference's per-partition COUNT
         loop (PartitionHandler.java:102-123). On failure, conservatively
         treats every candidate as affected (PartitionHandler.java:118-122)."""
-        cfg = self.config
         candidates = self.candidate_partitions()
         plan = PartitionPlan(candidates=candidates)
         if not candidates:
             return plan
-        # count the rows the rewrite will actually drop (NULL-of-P rows
-        # are dropped by the default retention scan, so P alone would
-        # under-count and break reconciliation)
-        pred = cfg.criteria.deletion_column(cfg.null_safe_retention)
-        pcol = cfg.partition_column
         try:
-            rows = (
-                self.spark.table(cfg.qualified_table)
-                .where(in_list_predicate(pcol, candidates))
-                .groupBy(pcol)
-                .agg(F.count(F.lit(1)).alias("total"),
-                     F.count(F.when(pred, 1)).alias("matches"))
-                .collect()
-            )
-            plan.counts = {r[pcol]: (r["total"], r["matches"]) for r in rows}
+            plan.counts = self.partition_counts(candidates)
         except Exception as exc:  # conservative inclusion
             log.warning("partition probe failed (%s); conservatively "
                         "including all %d candidates", exc, len(candidates))
-            plan.counts = {p: (-1, -1) for p in candidates}
+            plan.counts = None
         return plan
+
+    def partition_counts(self, partitions: list[str]
+                         ) -> dict[str, tuple[int, int]]:
+        """partition -> (total rows, rows the rewrite will drop), in one
+        partition-pruned aggregation. NULL-of-P rows are dropped by the
+        default retention scan, so counting P alone would under-count and
+        break reconciliation."""
+        cfg = self.config
+        pred = cfg.criteria.deletion_column(cfg.null_safe_retention)
+        pcol = cfg.partition_column
+        rows = (
+            self.spark.table(cfg.qualified_table)
+            .where(in_list_predicate(pcol, partitions))
+            .groupBy(pcol)
+            .agg(F.count(F.lit(1)).alias("total"),
+                 F.count(F.when(pred, 1)).alias("matches"))
+            .collect()
+        )
+        return {r[pcol]: (r["total"], r["matches"]) for r in rows}
 
 
 class DeletionExecutor:
@@ -166,64 +296,37 @@ class DeletionExecutor:
         DeletionExecutor.java:77-107)."""
         plan = plan or self.handler.analyze()
         self.metrics.dry_run = True
-        if any(t < 0 for t, _ in plan.counts.values()):
-            # probe failed (sentinel counts): measure directly — dry run is
-            # read-only, so the extra scan is the whole point
-            cfg = self.config
-            scoped = (self.spark.table(cfg.qualified_table)
-                      .where(in_list_predicate(cfg.partition_column,
-                                               plan.candidates)))
-            total = scoped.count()
-            deleted = scoped.where(
-                cfg.criteria.deletion_column(cfg.null_safe_retention)).count()
-            retained = total - deleted
-        else:
-            deleted = plan.would_delete
-            retained = sum(t for t, _ in plan.counts.values()) - deleted
+        counts = plan.counts
+        if counts is None:
+            # the analysis failed: measure again — a dry run is read-only,
+            # so this scan is the whole point
+            counts = self.handler.partition_counts(plan.candidates)
+        deleted = sum(m for _, m in counts.values())
         audit("dry_run", table=self.config.qualified_table,
               would_delete=deleted, affected=plan.affected)
-        return DeletionResult(deleted=deleted, retained=retained,
+        return DeletionResult(deleted=deleted,
+                              retained=sum(t for t, _ in counts.values())
+                              - deleted,
                               partitions_rewritten=[], partitions_dropped=[],
                               dry_run=True, metrics=self.metrics)
 
     def execute(self, plan: PartitionPlan | None = None) -> DeletionResult:
-        """Run the deletion: DROP fully-emptied partitions, rewrite the rest
-        in batches of ``partition_parallelism`` (C2/C3)."""
+        """Run the deletion: DROP the partitions the plan knows fully match,
+        rewrite the rest in batches of ``partition_parallelism`` (C2/C3)."""
         cfg = self.config
         plan = plan or self.handler.analyze()
         if cfg.dry_run:
             return self.dry_run(plan)
 
-        if any(t < 0 for t, _ in plan.counts.values()):
-            # Probe failed (sentinel counts). Rewrite-only would be WRONG
-            # for a partition whose rows ALL match: its retention scan is
-            # empty, and dynamic-partition overwrite writes nothing for a
-            # partition absent from the data — the matching rows would
-            # silently survive. Repair the plan with one scan counting
-            # (total, retained) per candidate; if this scan also fails,
-            # the exception aborts the job BEFORE any mutation.
-            pcol = cfg.partition_column
-            keep = cfg.criteria.retention_column(cfg.null_safe_retention)
-            rows = (self.spark.table(cfg.qualified_table)
-                    .where(in_list_predicate(pcol, plan.candidates))
-                    .groupBy(pcol)
-                    .agg(F.count(F.lit(1)).alias("total"),
-                         F.count(F.when(keep, 1)).alias("retained"))
-                    .collect())
-            plan.counts = {r[pcol]: (r["total"], r["total"] - r["retained"])
-                           for r in rows}
-        to_drop = plan.to_drop
-        to_rewrite = plan.to_rewrite
-
-        dropped = self.drop_partitions(to_drop)
-        rewritten: list[str] = []
-        for batch in _batches(to_rewrite, cfg.partition_parallelism):
-            self._rewrite_batch(batch, plan)
-            rewritten.extend(batch)
-
+        dropped = drop_partitions(self.spark, cfg.qualified_table,
+                                  cfg.partition_column, plan.to_drop)
         for pid in dropped:
-            _total, matches = plan.counts[pid]
-            self.metrics.record_dropped_partition(pid, matches)
+            self.metrics.record_dropped_partition(pid, plan.counts[pid][1])
+        rewritten: list[str] = []
+        for batch in _batches(plan.to_rewrite, cfg.partition_parallelism):
+            commit = self._rewrite_batch(batch, plan)
+            rewritten.extend(p for p in batch if p in commit.partitions)
+            dropped.extend(commit.dropped)
         self.metrics.partitions_dropped = len(dropped)
 
         deleted = self.metrics.records_deleted
@@ -237,108 +340,43 @@ class DeletionExecutor:
 
     # -- internals ----------------------------------------------------------
 
-    def retention_scan(self, partitions: list[str]) -> DataFrame:
-        """``SELECT * WHERE pcol IN (...) AND NOT(criteria)`` — the
-        copy-on-write read (DeletionExecutor.java:153-157). Declarative, so
-        Catalyst prunes to the listed partitions and pushes the retention
-        predicate into the columnar reader."""
+    def _rewrite_batch(self, batch: list[str], plan: PartitionPlan) -> Commit:
+        """The retention scan ``SELECT * WHERE pcol IN (...) AND
+        NOT(criteria)`` (DeletionExecutor.java:153-157), committed by
+        :func:`commit_partitions`.
+
+        Rows read and retained are observe()d DURING the write pass, so
+        ``deleted = read - retained`` is a write-time count with no extra
+        scan (the reference re-counts with a second job,
+        DeletionExecutor.java:158). ``plan.counts`` was measured at analyze
+        time: a retained count that differs from the plan means the
+        partitions changed in between (concurrent writer). That is
+        audited, and the metrics keep the write-time truth. The reference
+        has no answer here at all — its counts race identically
+        (DeletionExecutor.java:143-158) with no detection."""
         cfg = self.config
-        return (self.spark.table(cfg.qualified_table)
-                .where(in_list_predicate(cfg.partition_column, partitions))
-                .where(cfg.criteria.retention_column(cfg.null_safe_retention)))
-
-    def _rewrite_batch(self, batch: list[str], plan: PartitionPlan) -> None:
-        """Dynamic-partition overwrite of one batch (DeletionExecutor.java:
-        215-222). NO ``partitionBy`` on insertInto — the table's partition
-        spec governs (reference constraint, TEST_FIX.md:16-41).
-
-        The retained row count is collected with ``observe()`` DURING the
-        write pass — a free accumulator-backed metric, no extra scan (the
-        reference re-counts with a second job, DeletionExecutor.java:158).
-        It is also the write-TIME truth: ``plan.counts`` was measured at
-        analyze time, so a divergence means the partition changed in
-        between (concurrent writer) and reconciliation must use the
-        observed value, not the stale plan."""
-        from pyspark.sql import Observation
-
-        cfg = self.config
-        retained_df = self.retention_scan(batch)
-        # insertInto is positional: align to the table's column order.
-        cols = self.spark.table(cfg.qualified_table).columns
-        obs = Observation()
-        (retained_df.select(*cols)
-         .observe(obs, F.count(F.lit(1)).alias("retained"))
-         .write.mode("overwrite")
-         .insertInto(cfg.qualified_table))
-        observed_retained = int(obs.get["retained"])
-        # plan.counts is always real here: execute() repairs sentinel
-        # counts before batching.
-        before = sum(plan.counts[p][0] for p in batch)
-        per_part = {p: plan.counts[p][1] for p in batch}
-        planned_retained = before - sum(per_part.values())
-        if observed_retained != planned_retained:
-            log.warning(
-                "batch %s: retained rows at write time (%d) != analyze-time "
-                "plan (%d) — table modified between analyze and rewrite; "
-                "metrics use the observed count", batch, observed_retained,
-                planned_retained)
-            audit("concurrent_modification_detected", batch=batch,
-                  planned_retained=planned_retained,
-                  observed_retained=observed_retained)
-            # Reconcile: retained is the write-time truth (observed in
-            # the write pass itself); deleted falls back to the
-            # analyze-time per-partition match counts — the criteria's
-            # known target set, and the only non-negative estimate
-            # available without a second scan (the retention scan never
-            # reads matching rows, so write-time total is unobservable
-            # for free). Rebuild `before` as their sum so the batch
-            # arithmetic (deleted = before - retained) stays
-            # consistent instead of going negative when a concurrent
-            # writer ADDED rows after analyze. The reference has no
-            # answer here at all — its counts race identically
-            # (DeletionExecutor.java:143-158) with no detection.
-            before = observed_retained + sum(per_part.values())
-        self.metrics.record_batch(batch, before, observed_retained, per_part)
-
-    def drop_partitions(self, partitions: list[str]) -> list[str]:
-        """Empty-partition fast path: metadata DROP + external-dir delete
-        (DeletionExecutor.java:164-214). External tables keep their HDFS
-        directory after DROP PARTITION, so the files are removed explicitly
-        (DeletionExecutor.java:251-269)."""
-        if not partitions:
-            return []
-        cfg = self.config
-        fs = HadoopFS(self.spark)
-        dropped = []
-        for pid in partitions:
-            spec = partition_spec(cfg.partition_column, pid)
-            location = self._partition_location(spec)
-            self.spark.sql(
-                f"ALTER TABLE {cfg.qualified_table} "
-                f"DROP IF EXISTS PARTITION ({spec})")
-            if location:
-                try:
-                    fs.delete(location, recursive=True)
-                except Exception as exc:
-                    log.warning("could not delete partition dir %s: %s",
-                                location, exc)
-            dropped.append(pid)
-            audit("partition_dropped", table=cfg.qualified_table,
-                  partition=pid, location=location)
-        return dropped
-
-    def _partition_location(self, spec: str) -> str | None:
-        """DESCRIBE FORMATTED ... PARTITION → Location
-        (DeletionExecutor.java:173-187)."""
-        try:
-            rows = (self.spark.sql(
-                f"DESCRIBE FORMATTED {self.config.qualified_table} "
-                f"PARTITION ({spec})")
-                .filter(F.col("col_name") == "Location")
-                .select("data_type").collect())
-            return rows[0][0] if rows else None
-        except Exception:
-            return None
+        scan, read = observed_scan(self.spark, cfg.qualified_table,
+                                   cfg.partition_column, batch)
+        commit = commit_partitions(
+            self.spark, cfg.qualified_table, cfg.partition_column,
+            scan.where(cfg.criteria.retention_column(cfg.null_safe_retention)),
+            read)
+        per_part = None
+        if plan.counts is not None:
+            per_part = {p: plan.counts[p][1] for p in batch}
+            planned_retained = (sum(plan.counts[p][0] for p in batch)
+                                - sum(per_part.values()))
+            if commit.written != planned_retained:
+                log.warning(
+                    "batch %s: retained rows at write time (%d) != "
+                    "analyze-time plan (%d) — table modified between analyze "
+                    "and rewrite; metrics use the observed count", batch,
+                    commit.written, planned_retained)
+                audit("concurrent_modification_detected", batch=batch,
+                      planned_retained=planned_retained,
+                      observed_retained=commit.written)
+        self.metrics.record_batch(batch, commit.read, commit.written, per_part)
+        return commit
 
 
 def _batches(items: list[str], width: int) -> list[list[str]]:

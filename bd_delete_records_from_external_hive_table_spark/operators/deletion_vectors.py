@@ -14,11 +14,10 @@ strategy — the design Delta Lake / Iceberg call deletion vectors:
    the key columns. Tombstone sets are tiny relative to the table, so AQE
    plans a broadcast anti join: one pruned scan, zero fact-side shuffle.
 3. ``compact()`` — amortize: physically apply accumulated tombstones with
-   the reference's copy-on-write machinery (backup when enabled, dynamic
-   partition overwrite of affected partitions, metadata-only DROP + HDFS
-   delete for fully-emptied ones via
-   :meth:`deletion.DeletionExecutor.drop_partitions`), then clear exactly
-   the tombstone files it applied.
+   the copy-on-write commit (backup when enabled, dynamic partition
+   overwrite of affected partitions, metadata-only DROP + HDFS delete for
+   the ones it empties, all via :func:`deletion.commit_partitions`), then
+   clear exactly the tombstone files it applied.
 
 Write-amplification trade: copy-on-write pays at delete time (full
 partition rewrite, reads stay pristine); merge-on-read pays at read time
@@ -57,7 +56,8 @@ from ..config import EngineConfig
 from ..metrics import audit
 from ..partitions import in_list_predicate
 from ..sources.fs import HadoopFS
-from .deletion import DeletionExecutor, PartitionHandler
+from .deletion import (PartitionHandler, _batches, commit_partitions,
+                       observed_scan)
 
 __all__ = ["MergeOnReadDeleter", "MorDeleteResult", "CompactionResult"]
 
@@ -192,44 +192,27 @@ class MergeOnReadDeleter:
 
         # affected partitions from the store itself (recorded at delete
         # time) — no table scan needed to find them
-        part_col = (cfg.partition_column
-                    if cfg.partition_column in snapshot.columns
-                    else None)
-        if part_col is None:  # pragma: no cover - defensive
+        if cfg.partition_column not in snapshot.columns:  # pragma: no cover
             raise ValueError("tombstone store lacks the partition column")
-        affected = sorted(
-            r[0] for r in snapshot.select(part_col).distinct().collect())
+        affected = sorted(r[0] for r in snapshot.select(
+            cfg.partition_column).distinct().collect())
         if not affected:
             self._clear(files)
             return result
 
-        cow = DeletionExecutor(self.spark, cfg)
         if cfg.backup_enabled:
             from .backup import BackupManager
             BackupManager(self.spark, cfg).create_backup(affected)
 
-        base = self.spark.table(cfg.qualified_table)
-        width = max(1, cfg.partition_parallelism)
-        for i in range(0, len(affected), width):
-            batch = affected[i:i + width]
-            scoped = base.where(
-                in_list_predicate(cfg.partition_column, batch))
-            # re-project: UsingJoin fronts multi-column keys, and
-            # insertInto below maps columns positionally
-            retained = (scoped.join(keys, on=self.key_columns,
-                                    how="left_anti")
-                        .select(*base.columns))
-            # per-partition retained counts decide rewrite vs drop
-            kept = {r[0] for r in retained
-                    .select(cfg.partition_column).distinct().collect()}
-            emptied = [p for p in batch if p not in kept]
-            if kept:
-                # dynamic-partition overwrite touches only partitions
-                # present in `retained` (format comes from the table)
-                retained.write.mode("overwrite").insertInto(
-                    cfg.qualified_table)
-                result.partitions_rewritten += sorted(kept)
-            result.partitions_dropped += cow.drop_partitions(emptied)
+        for batch in _batches(affected, cfg.partition_parallelism):
+            scan, read = observed_scan(self.spark, cfg.qualified_table,
+                                       cfg.partition_column, batch)
+            # the commit drops the partitions the anti join empties
+            commit = commit_partitions(
+                self.spark, cfg.qualified_table, cfg.partition_column,
+                scan.join(keys, on=self.key_columns, how="left_anti"), read)
+            result.partitions_rewritten += commit.partitions
+            result.partitions_dropped += commit.dropped
 
         self._clear(files)
         audit("mor_compact", table=cfg.qualified_table,

@@ -3,14 +3,13 @@ tables — the INSERT/UPDATE sibling of the deletion engine.
 
 The reference implements only DELETE (`/root/reference/.../deletion/
 DeletionExecutor.java:215-222`: retention scan + dynamic-partition
-overwrite). The same copy-on-write machinery generalizes to MERGE
-semantics (``WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT
-*``) over storage with no row-level mutation: identify the partitions that
-hold old versions of the incoming keys, rewrite exactly those partitions
-with old-versions-removed ∪ updates, commit via dynamic-partition
-overwrite (`spark.sql.sources.partitionOverwriteMode=dynamic`, the same
-correctness-critical conf as deletion — static mode would wipe untouched
-partitions).
+overwrite). The same copy-on-write commit generalizes to MERGE semantics
+(``WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *``) over
+storage with no row-level mutation: identify the partitions that hold old
+versions of the incoming keys, rewrite exactly those partitions with
+old-versions-removed ∪ updates, and commit through the deletion engine's
+:func:`commit_partitions` (dynamic-partition overwrite — static mode would
+wipe untouched partitions).
 
 Scale design (100 TB table, bounded CDC batch):
 
@@ -20,27 +19,27 @@ Scale design (100 TB table, bounded CDC batch):
   shuffled.
 - The old-version probe is one partition-prunable semi join, not a
   per-partition loop. With ``candidate_partitions`` (e.g. from the
-  deletion engine's partition-window pre-pruning) the probe and rewrite
-  scan only those partitions' files.
+  deletion engine's partition-window pre-pruning) the probe scans only
+  those partitions' files.
 - A key may *move* partitions (its partition-column value changes in the
-  update). Both the old and the new partition are rewritten, so exactly
-  one version survives.
+  update). Both the old and the new partition are rewritten. When the
+  moved key was the old partition's only row, the rewrite leaves that
+  partition empty and the commit drops it; dynamic overwrite alone would
+  keep its old rows, and with them a second version of the key.
 """
 
 from __future__ import annotations
 
-import logging
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..metrics import MetricsCollector, audit
+from ..metrics import audit
 from ..partitions import in_list_predicate, sort_chronologically
+from .deletion import commit_partitions, observed_scan
 
 __all__ = ["merge_frames", "UpsertExecutor", "UpsertResult"]
-
-log = logging.getLogger(__name__)
 
 
 def merge_frames(target: DataFrame, updates: DataFrame,
@@ -80,8 +79,8 @@ class UpsertExecutor:
     """
 
     def __init__(self, spark: SparkSession, database: str, table: str,
-                 key_columns: list[str], partition_column: str = "partition_id",
-                 metrics: MetricsCollector | None = None):
+                 key_columns: list[str],
+                 partition_column: str = "partition_id"):
         if not key_columns:
             raise ValueError("key_columns must be non-empty")
         self.spark = spark
@@ -89,7 +88,6 @@ class UpsertExecutor:
         self.table = table
         self.keys = list(key_columns)
         self.pcol = partition_column
-        self.metrics = metrics or MetricsCollector()
 
     @property
     def qualified_table(self) -> str:
@@ -100,11 +98,11 @@ class UpsertExecutor:
         """Merge ``updates`` (full table schema incl. the partition column)
         into the target.
 
-        ``candidate_partitions`` bounds the old-version probe AND the
-        rewrite to those partitions — the caller asserts no incoming key
-        exists outside them (same contract as the deletion engine's
-        partition-window pre-pruning; violating it leaves a stale old
-        version alive in an unscanned partition).
+        ``candidate_partitions`` bounds the old-version probe to those
+        partitions — the caller asserts no incoming key exists outside
+        them (same contract as the deletion engine's partition-window
+        pre-pruning; violating it leaves a stale old version alive in an
+        unscanned partition).
         """
         cols = self.spark.table(self.qualified_table).columns
         missing = [c for c in cols if c not in updates.columns]
@@ -112,13 +110,13 @@ class UpsertExecutor:
             raise ValueError(f"updates is missing table columns {missing}")
         updates = updates.select(*cols).cache()
         try:
-            return self._execute(updates, cols, candidate_partitions)
+            return self._execute(updates, candidate_partitions)
         finally:
             updates.unpersist()
 
     # -- internals ----------------------------------------------------------
 
-    def _execute(self, updates: DataFrame, cols: list[str],
+    def _execute(self, updates: DataFrame,
                  candidates: list[str] | None) -> UpsertResult:
         n_updates = updates.count()
         if n_updates == 0:
@@ -152,17 +150,15 @@ class UpsertExecutor:
         inserted = n_updates - updated
 
         affected = sort_chronologically(list(old_parts | new_parts))
-        rewritten = (target
-                     .where(in_list_predicate(self.pcol, affected))
-                     .join(key_df, on=self.keys, how="left_anti")
-                     .unionByName(updates)
-                     .select(*cols))
-        # insertInto is positional; NO partitionBy — dynamic overwrite
-        # touches only the partitions present in the data (reference
-        # constraint, TEST_FIX.md:16-41)
-        rewritten.write.mode("overwrite").insertInto(self.qualified_table)
+        scan, read = observed_scan(self.spark, self.qualified_table,
+                                   self.pcol, affected)
+        commit = commit_partitions(
+            self.spark, self.qualified_table, self.pcol,
+            merge_frames(scan, updates, self.keys, broadcast_updates=True),
+            read)
 
         audit("upsert_executed", table=self.qualified_table,
-              inserted=inserted, updated=updated, partitions=affected)
+              inserted=inserted, updated=updated,
+              partitions=commit.partitions, dropped=commit.dropped)
         return UpsertResult(inserted=inserted, updated=updated,
-                            partitions_rewritten=affected)
+                            partitions_rewritten=commit.partitions)

@@ -140,14 +140,3 @@ class ValidationManager:
             return len(rows) > 0
         except Exception:
             return False
-
-    def count_matching(self, partitions: list[str] | None = None) -> int:
-        """COUNT(*) of rows the deletion would drop; ``partitions`` prunes
-        the scan — an explicit empty list means an empty scope (count 0),
-        only ``None`` means whole-table."""
-        cfg = self.config
-        df = self.spark.table(cfg.qualified_table)
-        if partitions is not None:
-            df = df.where(in_list_predicate(cfg.partition_column, partitions))
-        return df.where(
-            cfg.criteria.deletion_column(cfg.null_safe_retention)).count()

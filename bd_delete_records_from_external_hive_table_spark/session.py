@@ -23,7 +23,7 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-__all__ = ["SessionFactory", "get_session"]
+__all__ = ["SessionFactory"]
 
 #: Confs mirrored from the reference job (SparkSessionManager.java:30-39).
 REFERENCE_CONFS: dict[str, str] = {
@@ -166,8 +166,3 @@ class SessionFactory:
             return spark.sql("SHOW DATABASES").count() >= 1
         except Exception:
             return False
-
-
-def get_session(**kwargs) -> SparkSession:
-    """Module-level convenience wrapper around :meth:`SessionFactory.create`."""
-    return SessionFactory.create(**kwargs)

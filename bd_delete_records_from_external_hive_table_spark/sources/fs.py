@@ -33,10 +33,6 @@ class HadoopFS:
         # resolve per-path; do NOT close (shared JVM cache)
         return jpath.getFileSystem(self._conf)
 
-    def exists(self, path: str) -> bool:
-        p = self._path(path)
-        return self._fs(p).exists(p)
-
     def delete(self, path: str, recursive: bool = True) -> bool:
         """Recursive delete (DeletionExecutor.java:251-269)."""
         p = self._path(path)
@@ -44,10 +40,6 @@ class HadoopFS:
         if not fs.exists(p):
             return False
         return fs.delete(p, recursive)
-
-    def mkdirs(self, path: str) -> bool:
-        p = self._path(path)
-        return self._fs(p).mkdirs(p)
 
     def list_dirs(self, base: str) -> list[tuple[str, int]]:
         """List child directories of ``base`` → [(path, modification_time_ms)]

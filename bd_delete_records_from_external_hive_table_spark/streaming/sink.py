@@ -4,12 +4,13 @@ partition overwrite.
 The pattern the deletion engine's storage layout implies: events stream
 in, land in date partitions, and REPLAYED micro-batches must not
 duplicate rows. ``foreachBatch`` gives each micro-batch as a regular
-DataFrame; writing it with ``insertInto(overwrite=True)`` under
-``partitionOverwriteMode=dynamic`` replaces exactly the partitions
-present in the batch — so re-processing a batch after a failure
-converges to the same state (idempotent per partition) instead of
-appending duplicates. The checkpoint makes Spark replay at-least-once;
-partition-overwrite turns that into effectively-once per partition.
+DataFrame; committing it with the deletion engine's dynamic-partition
+overwrite (:func:`..operators.deletion.commit_partitions`) replaces
+exactly the partitions present in the batch — so re-processing a batch
+after a failure converges to the same state (idempotent per partition)
+instead of appending duplicates. The checkpoint makes Spark replay
+at-least-once; partition-overwrite turns that into effectively-once per
+partition.
 
 Caveat (documented, inherent to the pattern): a partition is rewritten
 with the rows of the CURRENT batch, so this sink fits
@@ -23,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..operators.deletion import commit_partitions
 
 __all__ = ["write_stream_to_partitioned_table", "write_cdc_stream_to_table"]
 
@@ -43,16 +46,8 @@ def write_stream_to_partitioned_table(stream_df: DataFrame, table: str,
     caller_session = stream_df.sparkSession
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # Correctness-critical: static overwrite mode would truncate the
-        # WHOLE table on every micro-batch. SessionFactory pins dynamic,
-        # but this is a public API — enforce it here too.
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       "dynamic")
-        cols = spark.table(table).columns
-        out = batch_df.withColumn(partition_col, partition_expr)
-        # insertInto is positional — align to the table's column order
-        out.select(*cols).write.mode("overwrite").insertInto(table)
+        commit_partitions(batch_df.sparkSession, table, partition_col,
+                          batch_df.withColumn(partition_col, partition_expr))
         # overwrite replaced files under existing partitions: invalidate
         # the CALLER's cached file listing (refreshing the clone's catalog
         # would not help the caller's readers)

@@ -201,7 +201,7 @@ def test_partition_window_scopes_deletion_and_validation(spark, table):
 
 def test_probe_failure_conservative_path_still_deletes_and_backs_up(
         spark, table):
-    """When partition analysis fails (sentinel counts), the job must
+    """When partition analysis fails (unknown counts), the job must
     still: back up every candidate, DROP a fully-matching partition
     (rewrite-only would leave its rows untouched under dynamic
     overwrite), rewrite partials, and validate."""
@@ -211,10 +211,9 @@ def test_probe_failure_conservative_path_still_deletes_and_backs_up(
     crit = DeletionCriteria(where_clause="status = 'INACTIVE' OR id >= 11")
     cfg = _cfg(table, crit, backup_enabled=True)
     job = DeletionJob(spark, cfg)
-    sentinel = PartitionPlan(candidates=["20260213", "20260214"],
-                             counts={"20260213": (-1, -1),
-                                     "20260214": (-1, -1)})
-    job.handler.analyze = lambda: sentinel
+    unknown = PartitionPlan(candidates=["20260213", "20260214"],
+                            counts=None)
+    job.handler.analyze = lambda: unknown
     outcome = job.run()
     assert outcome.success, outcome.error
     assert outcome.backup is not None  # all candidates backed up
@@ -467,6 +466,26 @@ def test_latest_backup_hive_skips_other_sources(spark, table):
         found = mgr.latest_backup()
         assert found is not None
         assert found.ref == genuine.ref
+        # retention is source-checked too: table <t>_backup_x shares this
+        # table's backup-name prefix, and its own aged backup must survive
+        # this table's sweep while this table's aged backup goes
+        other = f"{table}_backup_x"
+        spark.sql(f"""
+            CREATE TABLE {DB}.{other} (
+              id BIGINT, name STRING, status STRING, row_create_ts TIMESTAMP
+            ) PARTITIONED BY (partition_id STRING) STORED AS ORC
+        """)
+        seed(spark, other)
+        aged = datetime(2026, 1, 1, 0, 0, 0)
+        other_ref = BackupManager(spark, _cfg(
+            other, DeletionCriteria(where_clause="id = 5"),
+            backup_enabled=True)).create_backup(["20260213"], now=aged)
+        own_aged = mgr.create_backup(["20260213"], now=aged)
+        removed = mgr.cleanup_old_backups(now=datetime(2026, 2, 13, 12, 0, 0))
+        assert removed == [own_aged.ref]
+        assert spark.catalog.tableExists(other_ref.ref)
+        assert spark.catalog.tableExists(genuine.ref)
+        assert spark.catalog.tableExists(forged)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {forged}")
 
@@ -490,6 +509,13 @@ def test_latest_backup_path_skips_other_sources(spark, table, tmp_path):
     found = mgr.latest_backup()
     assert found is not None
     assert found.ref.removeprefix("file:") == genuine.ref
+    # retention is source-checked too: the other source's dir survives
+    # this table's sweep even when it is aged past the window
+    import os
+    aged = datetime(2026, 1, 1, 0, 0, 0).timestamp()
+    os.utime(forged, (aged, aged))
+    assert mgr.cleanup_old_backups(now=datetime(2026, 2, 13, 12, 0, 0)) == []
+    assert (forged / "_manifest.txt").is_file()
 
 
 def test_concurrent_writer_divergence_uses_observed_count(spark, table):

@@ -226,10 +226,16 @@ def test_mor_compact_spares_concurrent_append(spark, table, tmp_path):
 def test_mor_equivalent_to_cow(spark, tmp_path, where, start, end):
     """Strategy equivalence: merge-on-read delete+compact must leave the
     table in exactly the state the copy-on-write executor produces for
-    the same criteria — two independent implementations cross-check."""
+    the same criteria — two independent implementations cross-check. A
+    third copy runs the copy-on-write job with an unknown-count plan (the
+    failed-analysis path, which rewrites every candidate); it must agree
+    too, and a registered-but-empty partition survives all three."""
     from datetime import datetime
 
     from bd_delete_records_from_external_hive_table_spark.job import DeletionJob
+    from bd_delete_records_from_external_hive_table_spark.operators.deletion import (
+        PartitionPlan,
+    )
 
     crit = DeletionCriteria(
         where_clause=where,
@@ -238,7 +244,7 @@ def test_mor_equivalent_to_cow(spark, tmp_path, where, start, end):
         time_column="row_create_ts")
 
     names = []
-    for strategy in ("cow", "mor"):
+    for strategy in ("cow", "mor", "unknown"):
         name = f"test_eq_{strategy}_{next(_seq)}"
         names.append(name)
         spark.sql(f"""
@@ -248,7 +254,9 @@ def test_mor_equivalent_to_cow(spark, tmp_path, where, start, end):
         """)
         seed(spark, name, partition="20260213", hourly=True)
         seed(spark, name, partition="20260214", ids=range(11, 21))
-    cow_name, mor_name = names
+        spark.sql(f"ALTER TABLE {DB}.{name} "
+                  f"ADD PARTITION (partition_id='20260215')")
+    cow_name, mor_name, unknown_name = names
     try:
         cfg_cow = EngineConfig(database=DB, table=cow_name, criteria=crit,
                                backup_enabled=False,
@@ -264,18 +272,22 @@ def test_mor_equivalent_to_cow(spark, tmp_path, where, start, end):
         mor.delete()
         mor.compact()
 
-        cow_rows = sorted(map(tuple, spark.table(f"{DB}.{cow_name}")
-                              .collect()))
-        mor_rows = sorted(map(tuple, spark.table(f"{DB}.{mor_name}")
-                              .collect()))
-        assert cow_rows == mor_rows
-        cow_parts = sorted(r[0] for r in
-                           spark.sql(f"SHOW PARTITIONS {DB}.{cow_name}")
-                           .collect())
-        mor_parts = sorted(r[0] for r in
-                           spark.sql(f"SHOW PARTITIONS {DB}.{mor_name}")
-                           .collect())
-        assert cow_parts == mor_parts
+        cfg_unknown = EngineConfig(database=DB, table=unknown_name,
+                                   criteria=crit, backup_enabled=False,
+                                   validation_enabled=False)
+        job = DeletionJob(spark, cfg_unknown)
+        job.handler.analyze = lambda: PartitionPlan(
+            candidates=job.handler.candidate_partitions(), counts=None)
+        assert job.run().success
+
+        rows = [sorted(map(tuple, spark.table(f"{DB}.{n}").collect()))
+                for n in names]
+        assert rows[0] == rows[1] == rows[2]
+        parts = [sorted(r[0] for r in
+                        spark.sql(f"SHOW PARTITIONS {DB}.{n}").collect())
+                 for n in names]
+        assert parts[0] == parts[1] == parts[2]
+        assert "partition_id=20260215" in parts[0]
     finally:
         for name in names:
             spark.sql(f"DROP TABLE IF EXISTS {DB}.{name}")

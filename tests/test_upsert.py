@@ -2,9 +2,9 @@
 
 Covers the MERGE semantics the deletion engine's machinery generalizes
 to: in-place update, insert into a new partition, a key *moving*
-partitions (old version removed, exactly one survivor), untouched
-partitions preserved, batch-key-uniqueness guard, and candidate-partition
-pruning.
+partitions (old version removed, exactly one survivor, an emptied old
+partition dropped), untouched partitions preserved, batch-key-uniqueness
+guard, and candidate-partition pruning.
 """
 
 from __future__ import annotations
@@ -89,6 +89,26 @@ def test_update_insert_and_key_move(spark, table):
     assert snap[100] == ("User100", "NEW", "20260215")
     assert snap[1] == ("User1", "ACTIVE", "20260213")   # untouched row
 
+
+
+def test_key_moving_out_of_single_row_partition_drops_it(spark, table):
+    """A key that was its partition's only row moves elsewhere: the
+    rewrite leaves the old partition empty, which a dynamic overwrite
+    alone would keep with its old row — the commit must drop it so
+    exactly one version of the key survives."""
+    seed(spark, table, "20260213", [1])
+    seed(spark, table, "20260214", range(11, 14))
+
+    ex = UpsertExecutor(spark, DB, table, key_columns=["id"])
+    res = ex.execute(updates_df(spark, [
+        (1, "User1-moved", "MOVED", "2026-02-14 09:00:00", "20260214")]))
+
+    assert res.updated == 1 and res.inserted == 0
+    versions = spark.table(f"{DB}.{table}").where("id = 1").collect()
+    assert [(r.name, r.partition_id) for r in versions] == \
+        [("User1-moved", "20260214")]
+    parts = [r[0] for r in spark.sql(f"SHOW PARTITIONS {DB}.{table}").collect()]
+    assert parts == ["partition_id=20260214"]
 
 def test_untouched_partition_not_rewritten(spark, table):
     seed(spark, table, "20260213", range(1, 11))
